@@ -1,11 +1,17 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics.{METRIC_COMPILATION_TIME => compiles}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Plan-inspection utility: `runMain graft.Explain <queryName> [sfDir]`
-  * prints the formatted physical plan of a [[SparkEntry]] query and its
-  * warm execution time — the feedback loop for keeping plans
-  * shuffle-minimal, pushed-down, and inside whole-stage codegen.
+  * prints the formatted physical plan of a [[SparkEntry]] query, then
+  * builds and runs it three times into the noop sink (every column
+  * computed, unlike `count()`), printing each run's time, Spark jobs and
+  * codegen compiles — the feedback loop for keeping plans shuffle-minimal,
+  * pushed-down, inside whole-stage codegen, and compiled once: a warm run
+  * that still compiles has generated code that changes from run to run.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -30,12 +36,20 @@ object Explain {
         val Array(k, v) = kv.split("=", 2)
         spark.conf.set(k.trim, v.trim)
       })
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).explain("formatted")
     (1 to 3).foreach { i =>
+      val (j0, c0) = (jobs.get(), compiles.getCount)
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"[explain] run $i: $n rows in ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val s = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListenerBus(spark.sparkContext)
+      println(f"[explain] run $i: $s%.3f s, ${jobs.get() - j0} jobs, " +
+        s"${compiles.getCount - c0} codegen compiles (noop sink)")
     }
     spark.stop()
   }

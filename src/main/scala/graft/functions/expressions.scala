@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
@@ -594,6 +596,34 @@ case class SimHashMd5_60(child: Expression)
     copy(child = newChild)
 }
 
+/** A run-constant value (`current_timestamp()` once the optimizer has
+  * folded it) that codegens as a reference, not an inlined literal, so the
+  * generated source — and its codegen-cache entry — stays the same from run
+  * to run. The hash ignores the value: codegen walks hash-ordered
+  * expression sets, and a value-dependent order renames variables. */
+case class RunConstant(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+  override def foldable: Boolean = false
+  override def hashCode(): Int = getClass.getName.hashCode
+  override def prettyName: String = "run_constant"
+
+  override def eval(input: InternalRow): Any = child.eval(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = if (child.foldable) child.eval(null) else null
+    if (v == null) child.genCode(ctx)
+    else {
+      val ref = ctx.addReferenceObj("runConstant", v,
+        CodeGenerator.boxedType(dataType))
+      ev.copy(code = code"${CodeGenerator.javaType(dataType)} ${ev.value} = $ref;",
+        isNull = FalseLiteral)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): RunConstant =
+    copy(child = newChild)
+}
+
 /** Column-level entry points + SQL registration. */
 object exprs {
   private def col(e: Expression): Column = Bridge.column(e)
@@ -647,6 +677,7 @@ object exprs {
   def md5_long60(a: Column): Column = col(Md5Long60(ex(a)))
   def simhash_md5_60(tokens: Column): Column =
     col(SimHashMd5_60(ex(tokens)))
+  def run_constant(c: Column): Column = col(RunConstant(ex(c)))
 
   /** Register `token_sort_ratio`, `indel_ratio`, `abn_valid` for SQL use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -31,8 +31,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *
   * Scale shape: instances are shipped to executors by [[LlmMatch]];
   * the HttpClient is @transient-lazy per executor JVM, candidate lists
-  * arrive pre-bounded (LlmMatch caps them before collect_list), and each
-  * partition issues its rows' calls serially — fan-out parallelism is the
+  * arrive pre-bounded (LlmMatch caps them per left id), and each
+  * partition issues its groups' calls serially — fan-out parallelism is the
   * partition count, keeping request concurrency explicitly bounded.
   */
 final class HttpLlmStrategy(

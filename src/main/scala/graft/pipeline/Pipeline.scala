@@ -9,8 +9,8 @@ import graft.operators.{Cascade, LlmMatch, MatchStrategy, DeterministicStub}
 /** The callable, composable pipeline `run_pipeline.py` promised but never
   * implemented (/root/reference/run_pipeline.py:7-22 imports functions that
   * don't exist — SURVEY.md §3.4): stg → pre_dwh cleaning → three-stage
-  * match cascade → dwh.dim_entity_match_company_data, as ONE lazy Spark
-  * DAG with no driver round-trips.
+  * match cascade → dwh.dim_entity_match_company_data. The match cascade
+  * is ONE lazy Spark DAG; `run` pins only the cleaned frames it feeds.
   */
 object Pipeline {
 
@@ -42,96 +42,78 @@ object Pipeline {
   /** pre_dwh → dwh: the full match cascade (SURVEY.md §3.3) over cleaned
     * frames with the reference's column contract
     * (crawl: domain/company_name/abn/postcode,
-    *  abr: abn/entity_name/entity_type/state/postcode). */
+    *  abr: abn/entity_name/entity_type/state/postcode).
+    *
+    * One lazy plan that starts no job and pins nothing: ONE blocked join
+    * feeds both the fuzzy argmax and adjudication
+    * ([[LlmMatch.blockedStages]]), and the load timestamps sit behind
+    * [[graft.functions.RunConstant]], so a repeat run compiles nothing new.
+    */
   def matchEntities(spark: SparkSession, cleanedCrawl: DataFrame,
       cleanedAbr: DataFrame, cfg: Config = Config()): DataFrame = {
-    // Each cascade stage reads the cleaned frames AND the prior stages
-    // (residue anti-joins), so without materialization the regex-heavy
-    // cleaning + dedup exchanges re-execute once PER BRANCH of the
-    // final union (rule, fuzzy, llm, and both residue chains — the
-    // optimizer does not reuse exchanges across them). Lazy
-    // localCheckpoints make each shared frame compute exactly once per
-    // action (guide §3.3 "materialise an intermediate to truncate the
-    // plan"); the blocks are corpus-proportional — the same bytes any
-    // ONE branch already materialized in its shuffles.
     val crawl = cleanedCrawl.select(
       col("domain").as("crawl_domain"),
       col("company_name").as("crawl_company_name"),
       col("abn").as("crawl_abn"),
-      col("postcode").as("crawl_postcode")).localCheckpoint(false)
+      col("postcode").as("crawl_postcode"))
     val abr = cleanedAbr.select(
       col("abn").as("abr_abn"),
       col("entity_name").as("abr_company_name"),
       col("entity_type").as("abr_entity_type"),
       col("state").as("abr_state"),
-      col("postcode").as("abr_postcode")).localCheckpoint(false)
+      col("postcode").as("abr_postcode"))
 
     // J1 — exact ABN equi-join (keys cleaned upstream, so plain ===)
     val rule = Cascade.ruleMatch(
       crawl.filter(col("crawl_abn").isNotNull),
       abr.filter(col("abr_abn").isNotNull), "crawl_abn", "abr_abn")
-      .localCheckpoint(false)
 
-    // J3 — residue keyed on domain (entity_matching.py:172-173)
-    val afterRule = Cascade.residue(crawl, rule, "crawl_domain", "crawl_domain")
-
-    // J2+J4 — postcode-blocked token_sort_ratio fuzzy join, global argmax
-    val fuzzyLeft = afterRule
+    // J3 — residue keyed on domain (entity_matching.py:172-173), against
+    // the rule stage's output: both then hang off the rule's one broadcast,
+    // so AQE creates their stages together, in plan order, and the codegen
+    // stage ids (part of the generated classes) repeat from run to run
+    val afterRule = crawl.join(rule.select("crawl_domain"), Seq("crawl_domain"),
+        "left_anti")
       .withColumnRenamed("crawl_postcode", "block")
       .filter(col("block").isNotNull)
-    val fuzzyRight = abr.withColumnRenamed("abr_postcode", "block")
+    val blockedAbr = abr.withColumnRenamed("abr_postcode", "block")
       .filter(col("block").isNotNull)
-    val fuzzy = Cascade.fuzzyMatch(
-        fuzzyLeft, fuzzyRight, "block",
-        exprs.token_sort_ratio(col("crawl_company_name"), col("abr_company_name")),
-        "crawl_domain", Seq("abr_abn"),
-        Cascade.MatchConfig(cfg.fuzzyAcceptThreshold, cfg.fuzzyHighConfidence))
+
+    // J2+J4 + J5 — ONE postcode-blocked join: token_sort_ratio argmax per
+    // domain, and adjudication of the domains it leaves unmatched
+    val blocked = LlmMatch.blockedStages(afterRule, blockedAbr, "block",
+        "crawl_domain", "crawl_company_name", "abr_abn", "abr_company_name",
+        Some((exprs.token_sort_ratio(col("crawl_company_name"), col("abr_company_name")),
+          Cascade.MatchConfig(cfg.fuzzyAcceptThreshold, cfg.fuzzyHighConfidence))),
+        Some(cfg.llmStrategy).filter(_ => cfg.enableLlm), cfg.llmScore,
+        maxCandidates = 256)
       .withColumn("crawl_postcode", col("block"))
       .withColumn("abr_postcode", col("block"))
       .drop("block")
-      .localCheckpoint(false)
-
-    // NOT checkpointed (measured 2.5 → 3.4 s when tried): the llm
-    // stage's candidate gather reads only 3 columns of this frame, and
-    // a checkpoint would materialize every column, defeating pruning —
-    // the residue recompute over the checkpointed inputs is cheaper
-    val afterFuzzy = Cascade.residue(afterRule, fuzzy,
-      "crawl_domain", "crawl_domain")
-
-    // J5 — optional external adjudication within the postcode block
-    val llm =
-      if (!cfg.enableLlm) None
-      else Some {
-        LlmMatch(spark,
-            afterFuzzy.withColumnRenamed("crawl_postcode", "block")
-              .filter(col("block").isNotNull),
-            abr.withColumnRenamed("abr_postcode", "block")
-              .filter(col("block").isNotNull),
-            "block", "crawl_domain", "crawl_company_name",
-            "abr_abn", "abr_company_name",
-            cfg.llmStrategy, cfg.llmScore)
-          .withColumn("crawl_postcode", col("block"))
-          .withColumn("abr_postcode", col("block"))
-          .drop("block")
-      }
 
     // U1 + K4 — union stages, stamp load timestamps, project the dwh shape
-    val stages = Seq(rule, fuzzy) ++ llm.toSeq
-    Cascade.unionStages(stages)
+    val loadedAt = exprs.run_constant(current_timestamp())
+    Cascade.unionStages(Seq(rule, blocked))
       .withColumn("match_score",
         col("match_score").cast("decimal(5,2)")) // ddl_scripts.sql:87
-      .withColumn("created_at", current_timestamp())
-      .withColumn("creation_dt", current_timestamp())
+      .withColumn("created_at", loadedAt)
+      .withColumn("creation_dt", loadedAt)
       .select("crawl_domain", "crawl_company_name", "crawl_abn",
         "abr_abn", "abr_company_name", "abr_entity_type", "abr_state",
         "abr_postcode", "match_method", "match_score", "match_confidence",
         "created_at", "creation_dt")
   }
 
-  /** Full run: raw stg frames in, dwh match table out. */
+  /** Full run: raw stg frames in, dwh match table out. The cleaned frames
+    * stay pinned: several match branches read them, each with its own null
+    * filter pushed below the dedup, so unpinned each would re-run the regex
+    * chain and dedup shuffle (q141 warm: 1.0–1.3 s pinned, 1.7–2.0 s not).
+    * The pins are eager, so the cleaning runs when `run` is called and its
+    * task metrics land while its plan is still referenced. */
   def run(spark: SparkSession, stgAbr: DataFrame, stgCrawl: DataFrame,
       cfg: Config = Config()): DataFrame =
-    matchEntities(spark, cleanCrawl(stgCrawl), cleanAbr(stgAbr), cfg)
+    matchEntities(spark, cleanCrawl(stgCrawl).localCheckpoint(),
+      cleanAbr(stgAbr).localCheckpoint(), cfg)
 
   /** Attach per-stage match metrics via `Dataset.observe`: the counters
     * ride the job itself (no second pass over the data) and are readable

@@ -56,4 +56,38 @@ class CascadeEdgeSpec extends AnyFunSuite {
     val ids = fuzzy.select("crawl_id").collect().map(_.getLong(0)).toSeq
     assert(ids == Seq(1L)) // block 8 has no candidates → row absent
   }
+
+  test("the candidate cap keeps the same tied candidates at any partitioning") {
+    import spark.implicits._
+    // one block over the 256 cap: keys k000..k254 are fillers, and key k255
+    // straddles the cap with two names. The cap's total order (right key,
+    // right name) keeps ("k255", "Alpha Widgets") at every partitioning.
+    val left = Seq(("d1.com.au", "Alpha Widgets", "2000"))
+      .toDF("domain", "name", "block")
+    val right = ((0 until 255).map(i => (f"k$i%03d", s"Filler $i", "2000")) ++
+      Seq(("k255", "Zulu Foods", "2000"), ("k255", "Alpha Widgets", "2000")))
+      .toDF("abn", "rname", "block")
+    val offered = spark.sparkContext.longAccumulator("offered")
+    val ownName = new MatchStrategy {
+      override def adjudicate(n: String, cands: Seq[(String, String)]) = {
+        offered.add(cands.size.toLong)
+        cands.collectFirst { case (k, `n`) => k }
+      }
+    }
+    def picks(partitions: Int): Set[(String, String)] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try LlmMatch(spark, left.repartition(partitions),
+          right.repartition(partitions), "block", "domain", "name",
+          "abn", "rname", ownName)
+        .select("abn", "rname").collect().map(r => (r.getString(0), r.getString(1)))
+        .toSet
+      finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+    val one = picks(1)
+    val eight = picks(8)
+    // the pick realizes against every right row with the key
+    assert(one == Set(("k255", "Alpha Widgets"), ("k255", "Zulu Foods")))
+    assert(eight == one)
+    assert(offered.value == 2L * 256)
+  }
 }

@@ -142,4 +142,59 @@ class CascadeSpec extends AnyFunSuite {
     assert((0 to 2).map(m.getLong) == Seq(0L, 0L, 0L))
     assert((3 to 5).map(m.getDouble) == Seq(0.0, 0.0, 0.0))
   }
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val bus = org.apache.spark.sql.graftbridge.Bridge
+    bus.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      bus.drainListenerBus(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("matchEntities starts no job; one strategy call per adjudicated group") {
+    val calls = spark.sparkContext.longAccumulator("calls")
+    val counting = new graft.operators.MatchStrategy {
+      private val stub = new DeterministicStub(30.0)
+      override def adjudicate(n: String, cands: Seq[(String, String)]) = {
+        calls.add(1)
+        stub.adjudicate(n, cands)
+      }
+    }
+    val crawl = Pipeline.cleanCrawl(crawlDf)
+    val abr = Pipeline.cleanAbr(abrDf)
+    val (matches, jobs) = jobsDuring(Pipeline.matchEntities(spark, crawl, abr,
+      Pipeline.Config(enableLlm = true, llmStrategy = counting)))
+    assert(jobs == 0)
+    matches.write.format("noop").mode("overwrite").save()
+    // the 19 abbreviated variants are the only (domain, name) groups the
+    // rule and fuzzy stages leave to adjudication
+    assert(calls.value == 19L)
+  }
+
+  test("a repeat run of the q141 cascade compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // q141's corpus keyed by 100 supplier ids
+    val dir = java.nio.file.Files.createTempDirectory("q141").toString
+    spark.range(1, 101).select(col("id").as("s_suppkey"))
+      .write.parquet(s"$dir/supplier.parquet")
+    def land(): Unit = {
+      val (abr, crawl) = SparkEntry.variantCorpus(spark, dir)
+      Pipeline.run(spark, abr, crawl, Pipeline.Config(enableLlm = true))
+        .write.format("noop").mode("overwrite").save()
+    }
+    land()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    land()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+  }
 }
