@@ -19,16 +19,57 @@ import org.apache.spark.unsafe.types.UTF8String
   * Methods are plain static functions so generated code (doGenCode in
   * [[SimExpressions]]) can call them directly — keeping the fuzzy-join
   * scoring inside whole-stage codegen.
+  *
+  * Per-pair cost: the Indel LCS runs bit-parallel (Hyyrö) when the shorter
+  * string has at most 64 chars — a few word operations per char of the
+  * longer one — and falls back to the O(|a|·|b|) DP above that; token-sort
+  * tokenizes with a char scan instead of `split("\\s+")`. Both give the
+  * same results as the DP and the regex split (SimKernelSpec).
   */
 object SimKernel {
 
-  /** Insert/delete-only edit distance = |a| + |b| - 2 * LCS(a, b).
-    * O(|a|*|b|) time, O(min) space — fine for short name strings. */
+  /** Insert/delete-only edit distance = |a| + |b| - 2 * LCS(a, b). When
+    * the shorter string has at most 64 chars the LCS is Hyyrö's
+    * bit-parallel recurrence over one `Long` (one step per char of the
+    * longer string); longer strings take the O(|a|*|b|) DP. */
   def indelDistance(a: String, b: String): Int = {
     if (a.isEmpty) return b.length
     if (b.isEmpty) return a.length
-    // ensure the DP row is over the shorter string
+    // bit vector / DP row over the shorter string
     val (s, t) = if (a.length <= b.length) (a, b) else (b, a)
+    val lcs = if (s.length <= 64) lcsBitParallel(s, t) else lcsDp(s, t)
+    a.length + b.length - 2 * lcs
+  }
+
+  /** Per-thread match masks of [[lcsBitParallel]], one per UTF-16 char:
+    * bit j of `masks(c)` is set iff s(j) == c, and cleared again after the
+    * call. */
+  private val matchMasks = ThreadLocal.withInitial(() => new Array[Long](65536))
+
+  /** LCS length for |s| <= 64 (Hyyrö 2004): V starts all ones; per char c
+    * of t, with M the positions of c in s,
+    * V = (V + (V & M)) | (V & ~M); the LCS is the count of zero bits in
+    * V's low |s| bits. */
+  private def lcsBitParallel(s: String, t: String): Int = {
+    val masks = matchMasks.get
+    val n = s.length
+    var j = 0
+    while (j < n) { masks(s.charAt(j)) |= 1L << j; j += 1 }
+    var v = -1L
+    var i = 0
+    while (i < t.length) {
+      val u = v & masks(t.charAt(i))
+      v = (v + u) | (v - u)
+      i += 1
+    }
+    j = 0
+    while (j < n) { masks(s.charAt(j)) = 0L; j += 1 }
+    val low = if (n == 64) v else v & ((1L << n) - 1)
+    n - java.lang.Long.bitCount(low)
+  }
+
+  /** LCS length by the row DP over the shorter string `s`. */
+  private def lcsDp(s: String, t: String): Int = {
     val n = s.length
     val prev = new Array[Int](n + 1)
     val cur = new Array[Int](n + 1)
@@ -46,8 +87,7 @@ object SimKernel {
       System.arraycopy(cur, 0, prev, 0, n + 1)
       i += 1
     }
-    val lcs = prev(n)
-    a.length + b.length - 2 * lcs
+    prev(n)
   }
 
   /** rapidfuzz `fuzz.ratio` semantics, scale 0..100. Both-empty => 100. */
@@ -100,18 +140,41 @@ object SimKernel {
     else 100.0 * (1.0 - levenshteinDistance(a, b).toDouble / m)
   }
 
+  /** Java's `\\s` class: space, tab, newline, vertical tab, form feed,
+    * carriage return. */
+  private def isRegexSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** The maximal runs of non-`\\s` chars, in order — the non-empty parts
+    * of `s.split("\\s+")`, found by a scan instead of a regex. */
+  private def tokens(s: String): Array[String] = {
+    val out = new java.util.ArrayList[String](4)
+    var start = -1
+    var i = 0
+    while (i < s.length) {
+      if (isRegexSpace(s.charAt(i))) {
+        if (start >= 0) { out.add(s.substring(start, i)); start = -1 }
+      } else if (start < 0) start = i
+      i += 1
+    }
+    if (start >= 0) out.add(if (start == 0) s else s.substring(start))
+    out.toArray(new Array[String](out.size))
+  }
+
   /** Whitespace-tokenize, lexicographically sort, single-space rejoin.
     * Matches rapidfuzz's token_sort normalization (which does not lowercase
     * unless a processor is supplied — the reference supplies none; SURVEY.md
-    * §2.4 J4 fine print). */
+    * §2.4 J4 fine print). Tokens are `split("\\s+")`'s over the trimmed
+    * string. */
   def tokenSortNormalize(s: String): String = {
-    val trimmed = s.trim
-    if (trimmed.isEmpty) ""
-    else {
-      val toks = trimmed.split("\\s+")
-      java.util.Arrays.sort(toks.asInstanceOf[Array[AnyRef]])
-      toks.mkString(" ")
-    }
+    val toks = tokens(s.trim)
+    if (toks.length <= 1) return if (toks.isEmpty) "" else toks(0)
+    java.util.Arrays.sort(toks.asInstanceOf[Array[AnyRef]])
+    val sb = new java.lang.StringBuilder(s.length)
+    sb.append(toks(0))
+    var i = 1
+    while (i < toks.length) { sb.append(' ').append(toks(i)); i += 1 }
+    sb.toString
   }
 
   def tokenSortRatio(a: String, b: String): Double =
@@ -179,8 +242,8 @@ object SimKernel {
     * the whitespace token sets — the three strings fuzzywuzzy's
     * `_token_set` compares pairwise. */
   private def tokenSetParts(a: String, b: String): (String, String, String) = {
-    val ta = a.split("\\s+").iterator.filter(_.nonEmpty).toSet
-    val tb = b.split("\\s+").iterator.filter(_.nonEmpty).toSet
+    val ta = tokens(a).toSet
+    val tb = tokens(b).toSet
     val sect = ta.intersect(tb).toSeq.sorted.mkString(" ")
     val d1 = ta.diff(tb).toSeq.sorted.mkString(" ")
     val d2 = tb.diff(ta).toSeq.sorted.mkString(" ")

@@ -30,10 +30,12 @@ trait MatchStrategy extends Serializable {
 final class DeterministicStub(floor: Double = 50.0) extends MatchStrategy {
   override def adjudicate(
       leftName: String, candidates: Seq[(String, String)]): Option[String] = {
+    import graft.functions.SimKernel.{indelRatio, tokenSortNormalize}
     if (leftName == null || candidates.isEmpty) return None
+    val left = tokenSortNormalize(leftName)  // token-sort ratio, left side once
     val best = candidates
       .map { case (k, n) =>
-        (k, if (n == null) 0.0 else graft.functions.SimKernel.tokenSortRatio(leftName, n)) }
+        (k, if (n == null) 0.0 else indelRatio(left, tokenSortNormalize(n))) }
       .maxBy { case (k, s) => (s, k) }  // deterministic tie-break on key
     if (best._2 > floor) Some(best._1) else None
   }

@@ -63,9 +63,13 @@ object Pipeline {
       col("state").as("abr_state"),
       col("postcode").as("abr_postcode"))
 
-    // J1 — exact ABN equi-join (keys cleaned upstream, so plain ===)
+    // J1 — exact ABN equi-join (keys cleaned upstream, so plain ===). Only
+    // rows with a domain: the residue below is keyed on it, so a row without
+    // one stays in the residue and would be matched again downstream. The
+    // filter also makes the residue's copy of this plan the same as the rule
+    // branch (no `isnotnull` left to infer there), so they share one exchange
     val rule = Cascade.ruleMatch(
-      crawl.filter(col("crawl_abn").isNotNull),
+      crawl.filter(col("crawl_abn").isNotNull && col("crawl_domain").isNotNull),
       abr.filter(col("abr_abn").isNotNull), "crawl_abn", "abr_abn")
 
     // J3 — residue keyed on domain (entity_matching.py:172-173), against

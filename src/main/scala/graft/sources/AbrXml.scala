@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Cleaning
 
@@ -12,60 +13,49 @@ import graft.functions.Cleaning
   * memory, and the 50k-row insert batching (abr_parser.py:20,82) collapses
   * into the distributed writer.
   *
-  * Field paths follow abr_parser.py:51-68:
-  *   ABN text + @status + @ABNStatusFromDate,
-  *   EntityType/EntityTypeText,
-  *   MainEntity/NonIndividualName/NonIndividualNameText,
-  *   MainEntity/BusinessAddress/AddressDetails/{State,Postcode}.
-  * XML attributes surface as `_status`, `_ABNStatusFromDate` struct fields.
+  * The reader declares the record schema ([[Schema]]) instead of inferring
+  * it, so a load parses the files once: inference is a separate job that
+  * parses every file (default `samplingRatio` 1.0) before the read proper.
+  * Every field is a string, because inference types digit-only text as a
+  * number — `<Postcode>0800</Postcode>` (NT; ACT/NSW 02xx alike) became
+  * 800 and could never block against the "0800" the crawl side extracts.
+  * Elements absent from a record come back null.
   */
 object AbrXml {
 
-  /** Read raw `<ABR>` rows from bulk XML file(s). */
+  /** The fields abr_parser.py:51-68 reads: ABN text + @status +
+    * @ABNStatusFromDate (the element text lands in `_VALUE`, attributes in
+    * `_`-prefixed fields, with or without attributes present),
+    * EntityType/EntityTypeText,
+    * MainEntity/NonIndividualName/NonIndividualNameText,
+    * MainEntity/BusinessAddress/AddressDetails/{State,Postcode}. */
+  val Schema: StructType = StructType.fromDDL(
+    "ABN STRUCT<_VALUE: STRING, _status: STRING, _ABNStatusFromDate: STRING>, " +
+      "EntityType STRUCT<EntityTypeText: STRING>, " +
+      "MainEntity STRUCT<NonIndividualName: STRUCT<NonIndividualNameText: STRING>, " +
+      "BusinessAddress: STRUCT<AddressDetails: STRUCT<State: STRING, Postcode: STRING>>>")
+
+  /** Read raw `<ABR>` rows of [[Schema]] from bulk XML file(s). */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("xml")
       .option("rowTag", "ABR")
+      .schema(Schema)
       .load(path)
 
-  /** Project the nested XML rows into the flat stg.abr_raw_companies
+  /** Project [[read]]'s nested rows into the flat stg.abr_raw_companies
     * shape ([[graft.model.AbrCompany]]), incl. the reference's address
-    * synthesis (abr_parser.py:66) and yyyyMMdd date parse (:55).
-    *
-    * Schema-robust: XML inference only materializes fields that OCCUR in
-    * the scanned files, so every optional path is resolved against the
-    * actual schema and falls back to null when absent (a partial extract
-    * without BusinessAddress elements must not fail the whole load). */
+    * synthesis (abr_parser.py:66) and yyyyMMdd date parse (:55). */
   def toStaging(raw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    /** col(path) if every step exists in the schema, else null. */
-    def safeField(path: String): org.apache.spark.sql.Column = {
-      val steps = path.split("\\.")
-      val exists = steps.foldLeft(Option(raw.schema: org.apache.spark.sql.types.DataType)) {
-        case (Some(st: StructType), step) =>
-          st.fields.find(_.name == step).map(_.dataType)
-        case _ => None
-      }.isDefined
-      if (exists) col(path).cast("string") else lit(null).cast("string")
-    }
-    // ABN element may carry text + attributes → struct with _VALUE;
-    // tolerate both shapes (plain string when attributes are absent).
-    val abnIsStruct = raw.schema("ABN").dataType.isInstanceOf[StructType]
-    val abn = if (abnIsStruct) safeField("ABN._VALUE") else col("ABN").cast("string")
-    val status = if (abnIsStruct) safeField("ABN._status")
-      else lit(null).cast("string")
-    val statusDate = if (abnIsStruct) safeField("ABN._ABNStatusFromDate")
-      else lit(null).cast("string")
-    val state = safeField("MainEntity.BusinessAddress.AddressDetails.State")
-    val pc = safeField("MainEntity.BusinessAddress.AddressDetails.Postcode")
+    val state = col("MainEntity.BusinessAddress.AddressDetails.State")
+    val pc = col("MainEntity.BusinessAddress.AddressDetails.Postcode")
     raw.select(
-      abn.as("abn"),
-      safeField("MainEntity.NonIndividualName.NonIndividualNameText")
-        .as("entity_name"),
-      safeField("EntityType.EntityTypeText").as("entity_type"),
-      status.as("entity_status"),
+      col("ABN._VALUE").as("abn"),
+      col("MainEntity.NonIndividualName.NonIndividualNameText").as("entity_name"),
+      col("EntityType.EntityTypeText").as("entity_type"),
+      col("ABN._status").as("entity_status"),
       Cleaning.synthesizeAddress(state, pc).as("address"),
       pc.as("postcode"),
       state.as("state"),
-      Cleaning.parseAbrDate(statusDate).as("start_date"))
+      Cleaning.parseAbrDate(col("ABN._ABNStatusFromDate")).as("start_date"))
   }
 }

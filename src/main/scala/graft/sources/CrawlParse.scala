@@ -34,24 +34,31 @@ object CrawlParse {
       lit("(?is)<script[^>]*application/ld\\+json[^>]*>(.*?)</script>"), lit(1)))
 
   /** Full parse: (url, html) → the 10-field stg.common_crawl_raw_companies
-    * shape (commoncrawl_scraper.py:183-209, [[graft.model.CrawlCompany]]). */
+    * shape (commoncrawl_scraper.py:183-209, [[graft.model.CrawlCompany]]).
+    *
+    * The page text and the domain are computed once per page, in a
+    * projection of their own: each has several consumers, so Spark keeps
+    * that projection instead of inlining the regex chain into every
+    * consumer (common-subexpression elimination would not dedupe it across
+    * the interpreted ABN pick and both of its `coalesce` branches). */
   def parse(pages: DataFrame, urlCol: String = "url",
       htmlCol: String = "html"): DataFrame = {
-    val url = col(urlCol)
-    val text = htmlText(col(htmlCol))
-    val domain = Cleaning.extractDomain(url)
+    val (html, text, domain) = (col("__html"), col("__text"), col("__domain"))
     pages
       .filter(length(col(htmlCol)) > 0) // P3 — empty-fetch drop (:219-221)
+      .select(col(urlCol).as("url"), col(htmlCol).as("__html"),
+        htmlText(col(htmlCol)).as("__text"),
+        Cleaning.extractDomain(col(urlCol)).as("__domain"))
       .select(
-        url.as("url"),
+        col("url"),
         domain.as("domain"),
         Cleaning.extractCompanyName(domain).as("company_name"),
         Cleaning.extractAbn(text).as("abn"),
-        htmlTitle(col(htmlCol)).as("title"),
+        htmlTitle(html).as("title"),
         Cleaning.extractEmails(text).as("emails"),
         Cleaning.extractPhones(text).as("phones"),
         Cleaning.extractPostcode(text).as("postcode"),
-        jsonLd(col(htmlCol)).as("structured_data"),
+        jsonLd(html).as("structured_data"),
         Cleaning.snippet(text).as("snippet"))
   }
 

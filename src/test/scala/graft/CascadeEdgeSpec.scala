@@ -90,4 +90,22 @@ class CascadeEdgeSpec extends AnyFunSuite {
     assert(eight == one)
     assert(offered.value == 2L * 256)
   }
+
+  test("a crawl row without a domain is matched by one stage, not two") {
+    import spark.implicits._
+    // its ABN matches exactly and its name fuzzily: the residue is keyed on
+    // the domain, so a rule match could not take the row out of the residue
+    val crawl = Seq[(String, String, String, String)](
+      (null, "Acme Mining", "51824753556", "2000"),
+      ("wattle.com.au", "Wattle Co", "53004085616", "3000"))
+      .toDF("domain", "company_name", "abn", "postcode")
+    val abr = Seq(
+      ("51824753556", "Acme Mining", "PRV", "NSW", "2000"),
+      ("53004085616", "Wattle Co", "PRV", "VIC", "3000"))
+      .toDF("abn", "entity_name", "entity_type", "state", "postcode")
+    val got = graft.pipeline.Pipeline.matchEntities(spark, crawl, abr)
+      .select("crawl_domain", "match_method").collect()
+      .map(r => (Option(r.getString(0)), r.getString(1))).toSet
+    assert(got == Set((None, "fuzzy"), (Some("wattle.com.au"), "rule_based_abn")))
+  }
 }

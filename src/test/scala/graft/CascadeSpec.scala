@@ -143,24 +143,6 @@ class CascadeSpec extends AnyFunSuite {
     assert((3 to 5).map(m.getDouble) == Seq(0.0, 0.0, 0.0))
   }
 
-  /** Spark jobs started while `body` runs, counted by a listener. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val bus = org.apache.spark.sql.graftbridge.Bridge
-    bus.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      bus.drainListenerBus(spark.sparkContext)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("matchEntities starts no job; one strategy call per adjudicated group") {
     val calls = spark.sparkContext.longAccumulator("calls")
     val counting = new graft.operators.MatchStrategy {
@@ -172,8 +154,8 @@ class CascadeSpec extends AnyFunSuite {
     }
     val crawl = Pipeline.cleanCrawl(crawlDf)
     val abr = Pipeline.cleanAbr(abrDf)
-    val (matches, jobs) = jobsDuring(Pipeline.matchEntities(spark, crawl, abr,
-      Pipeline.Config(enableLlm = true, llmStrategy = counting)))
+    val (matches, jobs) = TestSpark.jobsDuring(Pipeline.matchEntities(spark,
+      crawl, abr, Pipeline.Config(enableLlm = true, llmStrategy = counting)))
     assert(jobs == 0)
     matches.write.format("noop").mode("overwrite").save()
     // the 19 abbreviated variants are the only (domain, name) groups the

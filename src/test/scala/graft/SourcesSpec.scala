@@ -58,6 +58,60 @@ class SourcesSpec extends AnyFunSuite {
     assert(r.getAs[java.sql.Date]("start_date").toString == "2019-04-01")
   }
 
+  test("S1: postcodes keep their leading zero (NT 0800, ACT 0200)") {
+    // digit-only text everywhere: an inferred schema would type Postcode
+    // as a number and land "800"
+    val xml =
+      """<?xml version="1.0" encoding="UTF-8"?>
+        |<Transfer>
+        |<ABR><ABN status="Active" ABNStatusFromDate="20190401">51824753556</ABN>
+        |  <EntityType><EntityTypeText>Company</EntityTypeText></EntityType>
+        |  <MainEntity><NonIndividualName>
+        |    <NonIndividualNameText>Top End Traders</NonIndividualNameText>
+        |  </NonIndividualName><BusinessAddress><AddressDetails>
+        |    <State>NT</State><Postcode>0800</Postcode>
+        |  </AddressDetails></BusinessAddress></MainEntity>
+        |</ABR>
+        |<ABR><ABN status="Active" ABNStatusFromDate="20190401">53004085616</ABN>
+        |  <EntityType><EntityTypeText>Company</EntityTypeText></EntityType>
+        |  <MainEntity><NonIndividualName>
+        |    <NonIndividualNameText>Capital Works</NonIndividualNameText>
+        |  </NonIndividualName><BusinessAddress><AddressDetails>
+        |    <State>ACT</State><Postcode>0200</Postcode>
+        |  </AddressDetails></BusinessAddress></MainEntity>
+        |</ABR>
+        |</Transfer>""".stripMargin
+    val dir = Files.createTempDirectory("abrxml-pc")
+    Files.writeString(dir.resolve("p.xml"), xml)
+    val got = AbrXml.toStaging(AbrXml.read(spark, dir.toString + "/*.xml"))
+      .orderBy("abn").collect()
+    assert(got.map(_.getAs[String]("postcode")).toSeq == Seq("0800", "0200"))
+    assert(got.map(_.getAs[String]("address")).toSeq == Seq("NT 0800", "ACT 0200"))
+  }
+
+  test("S1: reading is lazy; landing parses the XML in one job") {
+    val dir = Files.createTempDirectory("abrxml-jobs")
+    Files.writeString(dir.resolve("part1.xml"), abrXml)
+    val (staged, readJobs) = TestSpark.jobsDuring(
+      AbrXml.toStaging(AbrXml.read(spark, dir.toString + "/*.xml")))
+    assert(readJobs == 0) // no schema-inference pass
+    val (_, landJobs) = TestSpark.jobsDuring(
+      staged.write.format("noop").mode("overwrite").save())
+    assert(landJobs == 1)
+  }
+
+  test("S5: the page text is computed once per page") {
+    import spark.implicits._
+    // a file scan, so the optimizer cannot fold the parse into a local table
+    val dir = Files.createTempDirectory("pages").toString + "/p"
+    Seq(("https://www.harbourmining.com.au/about", html)).toDF("url", "html")
+      .write.parquet(dir)
+    val pages = spark.read.parquet(dir)
+    val plan = CrawlParse.parse(pages).queryExecution.executedPlan.toString
+    // htmlText's script/style strip, once, below its consumers
+    assert("\\(script\\|style\\)".r.findAllMatchIn(plan).size == 1, plan)
+  }
+
   private val html =
     """<html><head><title> Harbour Mining — Official Site </title>
       |<script type="application/ld+json">{"@type":"Organization","name":"Harbour Mining"}</script>

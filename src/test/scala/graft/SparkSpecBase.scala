@@ -17,4 +17,23 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `body`'s result and the Spark jobs started while it ran, counted by a
+    * listener. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val bus = org.apache.spark.sql.graftbridge.Bridge
+    bus.drainListenerBus(session.sparkContext)
+    session.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      bus.drainListenerBus(session.sparkContext)
+      (r, jobs.get())
+    } finally session.sparkContext.removeSparkListener(listener)
+  }
 }
