@@ -8,11 +8,12 @@ import graft.functions.{AbnValid, AHash64, DHash64, IndelRatio, PyTitle, SimHash
   * available to pure-SQL users at session build time —
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * val spark = graft.Sessions.local()   // installs these extensions
   * spark.sql("SELECT token_sort_ratio(a, b) FROM t")
   * }}}
   *
-  * or via `spark.sql.extensions=graft.GraftExtensions`. (No custom
+  * or on any builder via `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions`. (No custom
   * optimizer rules or strategies are required for reference parity —
   * SURVEY.md §4; this is the registration point where a similarity-join
   * rewrite rule would land.)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only skewed-block soak for the fuzzy cascade (`runMain
@@ -24,16 +23,8 @@ object SkewSoak {
   def main(args: Array[String]): Unit = {
     val replicas = if (args.length > 0) args(0).toInt else 10
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     // Zipf-ish postcode assignment, deterministic per id: 40% in metro
     // 2000, 20% in 3000, the rest uniform over 98 suburban codes — the
@@ -90,13 +81,10 @@ object SkewSoak {
     // runs on real groups, and the parity require below is non-vacuous)
     val cfg = operators.Cascade.MatchConfig(fuzzyAcceptThreshold = 40.0)
     def run(label: String, salt: Int): Long = {
-      val t0 = System.nanoTime()
-      val df = operators.Cascade.fuzzyMatch(
+      val (n, p) = Profile.during(spark)(operators.Cascade.fuzzyMatch(
         crawl, abr, "postcode", score, "crawl_id", Seq("abr_id"),
-        cfg = cfg, saltBlocks = salt)
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[skew] $label: $sec%.1f s ($n matches)")
+        cfg = cfg, saltBlocks = salt).count())
+      println(f"[skew] $label: ${p.seconds}%.1f s ($n matches)")
       n
     }
     // each variant runs twice: run1 pays codegen, run2 is the warm figure

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev-only soak harness (`runMain graft.Soak [replicas] [sfDir]`): scales
@@ -21,16 +20,7 @@ object Soak {
     // headline chain (the r13 100x soak target); default runs the full
     // rotation (the 30x r10-r12 suite)
     val mode = if (args.length > 2) args(2) else "full"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val base = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -46,42 +36,11 @@ object Soak {
     val docs = spark.read.parquet(corpusPath)
     println(s"[soak] corpus: ${docs.count()} docs (${replicas}x of $baseN)")
 
-    // per-block scheduler/GC attribution (r22, the leakage-split
-    // anti-scaling diagnosis): jobs/stages/tasks/summed-task-time and
-    // driver-JVM GC time per timed block
-    val jobsC = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stagesC = new java.util.concurrent.atomic.AtomicInteger(0)
-    val tasksC = new java.util.concurrent.atomic.AtomicInteger(0)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobsC.incrementAndGet()
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = stagesC.incrementAndGet()
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          tasksC.incrementAndGet()
-          if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
-        }
-      })
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val (j0, s0, k0, m0, g0) =
-        (jobsC.get(), stagesC.get(), tasksC.get(), taskMs.get(), gcMs())
-      val r = f
-      println(f"[soak] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-        f"(jobs ${jobsC.get() - j0}, stages ${stagesC.get() - s0}, " +
-        f"tasks ${tasksC.get() - k0}, " +
-        f"taskTime ${(taskMs.get() - m0) / 1e3}%.1f s, " +
-        f"gc ${(gcMs() - g0) / 1e3}%.1f s)")
+      val (r, p) = Profile.during(spark)(f)
+      println(f"[soak] $label: ${p.seconds}%.1f s " +
+        f"(jobs ${p.jobs}, stages ${p.stages}, tasks ${p.tasks}, " +
+        f"taskTime ${p.taskMs / 1e3}%.1f s, gc ${p.gcMs / 1e3}%.1f s)")
       r
     }
 

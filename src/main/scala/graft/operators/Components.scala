@@ -122,7 +122,8 @@ object Components {
     // count-proven-small edge list resolves in one collect instead
     val dt = edges.schema("src").dataType
     if (driverOrderable(dt)) {
-      val n = edges.count()
+      // one job; SQL count() adds an aggregate + shuffle (2 jobs). Same below
+      val n = edges.queryExecution.toRdd.count()
       if (n <= smallGraphCap(edges)) {
         val rows = edges.collect()
         // null endpoints keep the distributed loop (ADVICE r21): unlike
@@ -204,7 +205,7 @@ object Components {
           least(col(aCol), col(bCol)).as("lo"),
           greatest(col(aCol), col(bCol)).as("hi"))
         .filter(col("lo") =!= col("hi")).distinct())
-    var nEdges = edges.count()
+    var nEdges = edges.queryExecution.toRdd.count()
     // count-adaptive (r21): the star rounds below cost ~3 jobs each over
     // O(log² n) rounds; a count-proven-small edge list (the count above
     // exists anyway) resolves in one collect + driver union-find — same
@@ -868,7 +869,7 @@ object Components {
     // since r12, now spanning both paths.
     val dtMsf = e0.schema("lo").dataType
     if (driverOrderable(dtMsf)) {
-      val nE0 = e0.count()
+      val nE0 = e0.queryExecution.toRdd.count()
       if (nE0 <= smallGraphCap(e0)) {
         val rows = e0.collect().sortWith { (x, y) =>
           val (wx, wy) = (x.getLong(2), y.getLong(2))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -198,7 +198,13 @@ object Packing {
     * for each `c` in `tokenCols`; driver state is P·|cols| longs (the
     * [[assignShards]] model-state boundary). */
   def prefixSums(df: DataFrame, orderCol: String,
-      tokenCols: Seq[String], numParts: Int = 0): DataFrame = {
+      tokenCols: Seq[String], numParts: Int = 0): DataFrame =
+    prefixSumsWithTotals(df, orderCol, tokenCols, numParts)._1
+
+  /** [[prefixSums]] plus each column's grand total, summed on the driver
+    * from the subtotals the scan collects anyway: no second input pass. */
+  private[graft] def prefixSumsWithTotals(df: DataFrame, orderCol: String,
+      tokenCols: Seq[String], numParts: Int): (DataFrame, Seq[Long]) = {
     require(tokenCols.nonEmpty, "need at least one column to scan")
     val spark = df.sparkSession
     val parts =
@@ -231,12 +237,13 @@ object Packing {
       spark.sparkContext.parallelize(offsets.toSeq, 1), offSchema)
     val win = Window.partitionBy(col("__pid")).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted
+    val sums = parted
       .join(broadcast(offsetsDf), Seq("__pid"))
       .select((col(orderCol) +: tokenCols.map(col)) ++
         tokenCols.map(c =>
           (sum(col(c)).over(win) + col(s"__off_$c") - col(c))
             .as(s"${c}_offset")): _*)
+    (sums, tokenCols.indices.map(i => subtotals.map(_._2(i)).sum))
   }
 
   /** The naive single-window executable spec (one window partition = one

@@ -263,9 +263,10 @@ object Stats {
     * windows. No global single-partition window anywhere (the naive
     * `SUM() OVER (ORDER BY v)` twin is exactly the scale killer
     * [[Packing.assignShards]] documents). The final argmax is one
-    * `min_by` partial aggregate; the totals ride a 1-row broadcast.
-    * Both inputs must be non-empty (an empty side has no ECDF; the
-    * spec pins the contract).
+    * `min_by` partial aggregate; the totals are the sums of the
+    * driver-side subtotals, so the input is read once. Both inputs must
+    * be non-empty (an empty side has no ECDF); StatsSpec pins the row
+    * an empty side or an empty input returns.
     *
     * @return ONE row: (n_a, n_b, at_value, d_num, ks) */
   def ksStatistic(a: DataFrame, b: DataFrame, valueCol: String,
@@ -278,14 +279,12 @@ object Stats {
     val m = counts(a, "ca", "cb").unionByName(counts(b, "cb", "ca"))
       .groupBy(col("v"))
       .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-    val cums = Packing.prefixSums(m, "v", Seq("ca", "cb"), numParts)
-    val tot = m.agg(sum(col("ca")).as("__na"), sum(col("cb")).as("__nb"))
-    cums.crossJoin(broadcast(tot))
-      .select(col("v"), col("__na"), col("__nb"),
-        abs((col("ca_offset") + col("ca")) * col("__nb") -
-          (col("cb_offset") + col("cb")) * col("__na")).as("__d"))
+    val (cums, Seq(na, nb)) =
+      Packing.prefixSumsWithTotals(m, "v", Seq("ca", "cb"), numParts)
+    cums.select(col("v"), abs((col("ca_offset") + col("ca")) * nb -
+        (col("cb_offset") + col("cb")) * na).as("__d"))
       .agg(min_by(
-        struct(col("__na").as("n_a"), col("__nb").as("n_b"),
+        struct(lit(na).as("n_a"), lit(nb).as("n_b"),
           col("v").as("at_value"), col("__d").as("d_num")),
         struct((-col("__d")).as("nd"), col("v"))).as("m"))
       .select(col("m.n_a"), col("m.n_b"), col("m.at_value"),

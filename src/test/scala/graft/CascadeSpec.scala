@@ -154,9 +154,9 @@ class CascadeSpec extends AnyFunSuite {
     }
     val crawl = Pipeline.cleanCrawl(crawlDf)
     val abr = Pipeline.cleanAbr(abrDf)
-    val (matches, jobs) = TestSpark.jobsDuring(Pipeline.matchEntities(spark,
+    val (matches, p) = Profile.during(spark)(Pipeline.matchEntities(spark,
       crawl, abr, Pipeline.Config(enableLlm = true, llmStrategy = counting)))
-    assert(jobs == 0)
+    assert(p.jobs == 0)
     matches.write.format("noop").mode("overwrite").save()
     // the 19 abbreviated variants are the only (domain, name) groups the
     // rule and fuzzy stages leave to adjudication

@@ -92,12 +92,12 @@ class SourcesSpec extends AnyFunSuite {
   test("S1: reading is lazy; landing parses the XML in one job") {
     val dir = Files.createTempDirectory("abrxml-jobs")
     Files.writeString(dir.resolve("part1.xml"), abrXml)
-    val (staged, readJobs) = TestSpark.jobsDuring(
+    val (staged, read) = Profile.during(spark)(
       AbrXml.toStaging(AbrXml.read(spark, dir.toString + "/*.xml")))
-    assert(readJobs == 0) // no schema-inference pass
-    val (_, landJobs) = TestSpark.jobsDuring(
+    assert(read.jobs == 0) // no schema-inference pass
+    val (_, land) = Profile.during(spark)(
       staged.write.format("noop").mode("overwrite").save())
-    assert(landJobs == 1)
+    assert(land.jobs == 1)
   }
 
   test("S5: the page text is computed once per page") {

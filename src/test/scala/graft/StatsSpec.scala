@@ -223,6 +223,20 @@ class StatsSpec extends AnyFunSuite {
     }
   }
 
+  test("ksStatistic: an empty side fails on its zero total; an empty " +
+      "input yields one all-null row") {
+    import spark.implicits._
+    val a = Seq(3L, 1L, 1L).toDF("x")
+    val none = Seq.empty[Long].toDF("x")
+    for ((x, y) <- Seq((a, none), (none, a))) {
+      val e = intercept[ArithmeticException](
+        Stats.ksStatistic(x, y, "x").collect())
+      assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
+    }
+    val rows = Stats.ksStatistic(none, none, "x").collect()
+    assert(rows.length == 1 && (0 until 5).forall(rows.head.isNullAt), rows)
+  }
+
   test("ksStatistic: partition-count independent (the two-phase scan " +
       "contract) and matches a driver-side reference on random data") {
     import spark.implicits._
