@@ -27,88 +27,34 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Shared hygiene for the per-(session, dir) eager-localCheckpoint
-    * memos (the q133/q148/q113/q49 shared-subplan convention):
-    * stopped-session keys are pruned on access (their blocks died with
-    * the context); retention is BOUNDED to the most recent dir per
-    * session — a long-lived session sweeping many dirs no longer
-    * accretes one checkpoint per dir (ADVICE r12). Evicted frames get
-    * a best-effort explicit unpersist of their checkpoint blocks;
-    * even without it, dropping the map reference makes the RDD
-    * unreachable and Spark's ContextCleaner reclaims the blocks on
-    * the next GC. `computeIfAbsent` serializes concurrent first
-    * arrivals (graft.Verify runs queries concurrently). */
-  private def memoCheckpoint(
-      memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-        DataFrame],
-      s: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq s) && e.getKey._2 != dir) {
-        try {
-          e.getValue.queryExecution.analyzed match {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              // blocking (r22): eviction is rare (one per dir switch), so
-              // the synchronous block-manager round-trip costs nothing —
-              // and a non-blocking unpersist here was VERDICT r21's prime
-              // suspect for async cleanup racing a later consumer or a
-              // session teardown
-              lr.rdd.unpersist(blocking = true)
-            case _ => ()
-          }
-        } catch { case scala.util.control.NonFatal(_) => () }
-        it.remove()
-      }
-    }
-    memo.computeIfAbsent((s, dir), _ => build.localCheckpoint(eager = true))
+  /** A [[graft.operators.SuffixArray.SubstrIndex]] saved under a fresh
+    * temp root on the IndexStore generation protocol and loaded back
+    * (q230/q234's build-save-load serving convention), so repeat query
+    * timings measure the PROBE, the serving cost. Its memo deletes the
+    * root on eviction. */
+  private def savedSubstrIndex(s: SparkSession, tmpPrefix: String)(
+      ix: operators.SuffixArray.SubstrIndex)
+      : (operators.SuffixArray.SubstrIndex, java.nio.file.Path) = {
+    val tmp = java.nio.file.Files.createTempDirectory(tmpPrefix)
+    val root = tmp.resolve("ix").toString
+    operators.SuffixArray.saveSubstrIndex(ix, root)
+    (operators.SuffixArray.loadSubstrIndex(s, root), tmp)
   }
-
-  /** [[memoCheckpoint]]'s hygiene applied to persisted
-    * [[graft.operators.SuffixArray.SubstrIndex]] artifacts (q230/q234's
-    * build-save-load serving convention): stopped-session keys pruned;
-    * same-session different-dir entries evicted WITH their temp save
-    * roots deleted (ADVICE r19 — the old memos only pruned stopped
-    * sessions, so a session sweeping many dirs accreted one
-    * checkpointed index and one uncleaned temp directory per dir).
-    * The build runs once per (session, dir): built, persisted on the
-    * IndexStore generation protocol, re-loaded — so repeat query
-    * timings measure the PROBE, the serving cost. */
-  private def memoSubstrIndex(
-      memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-        (operators.SuffixArray.SubstrIndex, java.nio.file.Path)],
-      s: SparkSession, dir: String, tmpPrefix: String)(
-      build: => operators.SuffixArray.SubstrIndex)
-      : operators.SuffixArray.SubstrIndex = {
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq s) && e.getKey._2 != dir) {
-        deleteTreeBestEffort(e.getValue._2)
-        it.remove()
-      }
-    }
-    memo.computeIfAbsent((s, dir), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory(tmpPrefix)
-      val root = tmp.resolve("ix").toString
-      operators.SuffixArray.saveSubstrIndex(build, root)
-      (operators.SuffixArray.loadSubstrIndex(s, root), tmp)
-    })._1
-  }
+  private def substrIndexMemo() =
+    SessionMemo[(operators.SuffixArray.SubstrIndex, java.nio.file.Path)](
+      ix => deleteTreeBestEffort(ix._2))
 
   /** Best-effort recursive delete of an evicted memo's temp root —
-    * failure is ignorable (the JVM's temp dir is reaped by the
-    * container anyway; eviction correctness never depends on it). */
-  private def deleteTreeBestEffort(root: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case scala.util.control.NonFatal(_) => () })
-    } catch { case scala.util.control.NonFatal(_) => () }
+    * a file that fails to delete is skipped (the JVM's temp dir is
+    * reaped by the container anyway; eviction correctness never depends
+    * on it). */
+  private def deleteTreeBestEffort(root: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .sortBy(-_.getNameCount)
+      .foreach(p => try java.nio.file.Files.deleteIfExists(p)
+        catch { case scala.util.control.NonFatal(_) => () })
+  }
 
   /** Exact decimal sum of a ~2-decimal double column, surfaced as double
     * (order-independent, so hash-stable across engines). */
@@ -740,14 +686,11 @@ object SparkEntry {
     * so each (session, dir) pair materializes it ONCE as an eager
     * localCheckpoint and all five consumers scan the shared blocks;
     * each query's ORACLE stays self-contained (its SQL twin still
-    * replays the full sketch CTE chain). Memo hygiene matches
-    * [[q133Labels]]: stopped-session keys pruned on access and
-    * `computeIfAbsent` serializes concurrent first arrivals (graft
-    * .Verify runs queries concurrently). */
-  private val q49PairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+    * replays the full sketch CTE chain). Memo hygiene is
+    * [[SessionMemo]]'s. */
+  private val q49PairsMemo = SessionMemo.checkpointed()
   private def q49Pairs(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q49PairsMemo, s, dir) {
+    q49PairsMemo(s, dir) {
       val p = SketchParams.q49
       Dedup.minhashLshPortable(q49Corpus(s, dir), "text", "doc_id",
         ngram = p.ngram, numHashes = p.numHashes, bands = p.bands,
@@ -1555,22 +1498,22 @@ object SparkEntry {
     implicit val spark: SparkSession = s
     val p = SketchParams.q92
     val emb = t(s, dir, "embeddings")
-    // train-once-reuse (opt-in via SPARK_GRAFT_CENTROIDS_DIR): the learned
-    // quantizer the q92 oracle hash-verifies is exactly the model worth
-    // persisting — the parquet artifact carries the verified bits across
-    // runs, and serving pays only the probe joins
-    def trained = Ann.kmeansCentroidsPortable(emb, "embedding", "vec_id",
-      p.nlist, p.iters, p.scale)
-    val cents = sys.env.get("SPARK_GRAFT_CENTROIDS_DIR") match {
-      case Some(root) => Ann.trainOrLoadCentroids(
-        s"$root/q92_nlist${p.nlist}_iters${p.iters}_scale${p.scale}")(trained)
-      case None => trained
-    }
-    // full-index serving (r16): the posting lists join the centroids
-    // under the same opt-in — quantize-and-assign runs once, not per
-    // serving run; ivfServe makes the ranking integers identical
-    q92IvfIndexMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val ix = q92IvfIndexMemo.computeIfAbsent((s, dir), _ => {
+    val ix = q92IvfIndexMemo(s, dir) {
+      // train-once-reuse (opt-in via SPARK_GRAFT_CENTROIDS_DIR): the
+      // learned quantizer the q92 oracle hash-verifies is exactly the
+      // model worth persisting — the parquet artifact carries the
+      // verified bits across runs, and serving pays only the probe joins
+      def trained = Ann.kmeansCentroidsPortable(emb, "embedding", "vec_id",
+        p.nlist, p.iters, p.scale)
+      val cents = sys.env.get("SPARK_GRAFT_CENTROIDS_DIR") match {
+        case Some(root) => Ann.trainOrLoadCentroids(
+          s"$root/q92_nlist${p.nlist}_iters${p.iters}_scale${p.scale}")(
+          trained)
+        case None => trained
+      }
+      // full-index serving (r16): the posting lists join the centroids
+      // under the same opt-in — quantize-and-assign runs once, not per
+      // serving run; ivfServe makes the ranking integers identical
       def built = Ann.ivfIndex(emb, "embedding", "vec_id", p.nlist,
         p.scale, centroids = Some(cents))
       val raw = sys.env.get("SPARK_GRAFT_CENTROIDS_DIR") match {
@@ -1580,14 +1523,14 @@ object SparkEntry {
         case None => built
       }
       raw.copy(lists = raw.lists.localCheckpoint(true))
-    })
+    }
     Ann.ivfTopKFromIndex(ix, emb.filter(col("vec_id") < p.maxQueryId),
         "embedding", "vec_id", k = p.k, nprobe = p.nprobe)
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("long").as("rank"))
   }
-  private val q92IvfIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), operators.Ann.IvfIndex]
+  private val q92IvfIndexMemo =
+    SessionMemo[Ann.IvfIndex](ix => SessionMemo.unpersist(ix.lists))
 
   /** Semantic-dedup chain-root resolution
     * ([[graft.operators.Dedup.semanticDedup]] →
@@ -2127,14 +2070,11 @@ object SparkEntry {
     * localCheckpoint and all three consumers scan the shared blocks
     * (at cluster scale: one co-occurrence shuffle instead of three).
     * Each query's ORACLE stays self-contained — its SQL twin still
-    * builds the edge list from the base tables. Memo hygiene matches
-    * [[q133Labels]]: stopped-session keys pruned on access,
-    * `computeIfAbsent` serializes concurrent first arrivals, and
-    * evicted frames' checkpoint blocks die with their context. */
-  private val coOrderMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+    * builds the edge list from the base tables. Memo hygiene is
+    * [[SessionMemo]]'s. */
+  private val coOrderMemo = SessionMemo.checkpointed()
   private def coOrderEdges(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(coOrderMemo, s, dir) {
+    coOrderMemo(s, dir) {
       operators.Components.coOccurrenceEdges(
         t(s, dir, "lineitem")
           .filter(col("l_quantity") >= SketchParams.q113.minQty)
@@ -2295,9 +2235,8 @@ object SparkEntry {
     // re-derived the full estimate+score chain per call (VERDICT r20
     // item 5, the measured q128 drift), while the memo makes the chain
     // build once per (session, dir) like every other shared stage
-    memoCheckpoint(q123ScoredMemo, s, dir) { q123FellegiSunterBuild(s, dir) }
-  private val q123ScoredMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+    q123ScoredMemo(s, dir) { q123FellegiSunterBuild(s, dir) }
+  private val q123ScoredMemo = SessionMemo.checkpointed()
 
   private[graft] def q123FellegiSunterBuild(s: SparkSession, dir: String)
       : DataFrame = {
@@ -2529,14 +2468,11 @@ object SparkEntry {
     * materializes it ONCE as an eager localCheckpoint and all three
     * queries scan the shared blocks; each query's ORACLE stays
     * self-contained (its SQL twin still unrolls the full recurrence).
-    * graft.Verify runs queries concurrently — `computeIfAbsent` makes
-    * the first arrival compute while the other consumers block on the
-    * same key. Entries of stopped sessions are pruned on access (their
-    * blocks are already gone with the context). */
-  private val lpaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+    * [[SessionMemo]] builds it once even when the consumers arrive
+    * concurrently (graft.Verify runs queries concurrently). */
+  private val lpaMemo = SessionMemo.checkpointed()
   private def q133Labels(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(lpaMemo, s, dir) {
+    lpaMemo(s, dir) {
       val p = SketchParams.q133
       val e0 = t(s, dir, "lineitem")
         .join(t(s, dir, "orders"),
@@ -2827,10 +2763,9 @@ object SparkEntry {
     * shared by q145 (the scoring report) and q205 (which RESAMPLES by
     * those weights), so one profile build + one scoring pass feeds
     * both within a Verify run (the q195Seg/q193Flags convention). */
-  private val q145IrMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q145IrMemo = SessionMemo.checkpointed()
   private def q145Ir(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q145IrMemo, s, dir) {
+    q145IrMemo(s, dir) {
       val p = SketchParams.q145
       operators.Selection.importanceRatio(t(s, dir, "documents"),
         "text", "doc_id",
@@ -2897,10 +2832,9 @@ object SparkEntry {
     * like the q133 labeling, each (session, dir) pair materializes it
     * ONCE as an eager localCheckpoint and both queries scan the shared
     * blocks (each query's ORACLE stays self-contained). */
-  private val msfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val msfMemo = SessionMemo.checkpointed()
   private def q148Forest(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(msfMemo, s, dir) {
+    msfMemo(s, dir) {
       val p = SketchParams.q148
       val e0 = t(s, dir, "lineitem")
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
@@ -2982,12 +2916,11 @@ object SparkEntry {
   /** The NN-Descent graph is consumed by q152 itself AND q154's
     * single-linkage clustering, and the descent is an iterative
     * multi-job subplan — so it joins the memoized-checkpoint family
-    * ([[memoCheckpoint]]; the operator's own round checkpoints make
-    * the outer frame cheap to re-wrap). */
-  private val knnMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+    * ([[SessionMemo.checkpointed]]; the operator's own round
+    * checkpoints make the outer frame cheap to re-wrap). */
+  private val knnMemo = SessionMemo.checkpointed()
   private def q152Graph(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(knnMemo, s, dir) {
+    knnMemo(s, dir) {
       val p = SketchParams.q152
       Ann.nnDescentPortable(t(s, dir, "embeddings"), "embedding",
         "vec_id", p.k, p.rounds, p.scale)
@@ -3111,14 +3044,14 @@ object SparkEntry {
   /** The old-slice descent graph BOTH q157 (probe) and q180 (merge)
     * serve against — the persisted-index story the r13 verdict asked
     * for: the backbone is built ONCE per (session, dir) and
-    * materialized ([[memoCheckpoint]], the q49/q152 convention), so the
-    * serving queries pay probe/merge cost only, not index-build cost.
+    * materialized ([[SessionMemo.checkpointed]], the q49/q152
+    * convention), so the serving queries pay probe/merge cost only,
+    * not index-build cost.
     * Each query's ORACLE stays self-contained (its SQL twin replays the
     * full descent chain). */
-  private val q157GraphMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q157GraphMemo = SessionMemo.checkpointed()
   private def q157OldGraph(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q157GraphMemo, s, dir) {
+    q157GraphMemo(s, dir) {
       val p152 = SketchParams.q152
       val p = SketchParams.q157
       def built = Ann.nnDescentPortable(
@@ -3375,10 +3308,9 @@ object SparkEntry {
   /** The layer-1 descent graph for q189 — memoized per (session, dir)
     * like [[q157OldGraph]] (same q152 build parameters, over the
     * layer slice). */
-  private val q189LayerMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q189LayerMemo = SessionMemo.checkpointed()
   private def q189LayerGraph(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q189LayerMemo, s, dir) {
+    q189LayerMemo(s, dir) {
       val p152 = SketchParams.q152
       val p = SketchParams.q157
       val ph = SketchParams.q189
@@ -3424,10 +3356,9 @@ object SparkEntry {
     * share one vocabulary aggregation + unrolled DP within a Verify
     * pass (the q193Flags/q49Pairs convention; the DP is the suite's
     * single most expensive subplan). */
-  private val q195SegMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q195SegMemo = SessionMemo.checkpointed()
   private def q195Seg(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q195SegMemo, s, dir) {
+    q195SegMemo(s, dir) {
       implicit val spark: SparkSession = s
       val p = SketchParams.q195
       val docs = t(s, dir, "documents")
@@ -3695,10 +3626,9 @@ object SparkEntry {
     * near-dup → kept) — memoized per (session, dir) so q193 (whole-doc
     * shard pack) and q196 (exact-fill sequence pack) share one
     * perceptron training run within a Verify pass. */
-  private val q193FlagsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q193FlagsMemo = SessionMemo.checkpointed()
   private def q193Flags(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q193FlagsMemo, s, dir) {
+    q193FlagsMemo(s, dir) {
       val p = SketchParams.q190
       val real = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
@@ -3709,10 +3639,9 @@ object SparkEntry {
   /** The q190 trained weight table, memoized per (session, dir) — ONE
     * training run shared by the q193 decision chain and the q218 data
     * card (zero retraining across the observability family). */
-  private val q190WeightsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q190WeightsMemo = SessionMemo.checkpointed()
   private def q190CurWeights(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q190WeightsMemo, s, dir) {
+    q190WeightsMemo(s, dir) {
       val p = SketchParams.q190
       val real = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val junkText = array_join(transform(
@@ -3779,10 +3708,9 @@ object SparkEntry {
   /** The q218 card's FULL-corpus minhash pair list (the q49 portable
     * kernel over every real doc), shared by the card's dup flags AND
     * its cluster resolution — one sketch pass. */
-  private val q218PairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q218PairsMemo = SessionMemo.checkpointed()
   private def q218Pairs(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q218PairsMemo, s, dir) {
+    q218PairsMemo(s, dir) {
       val p49 = SketchParams.q49
       operators.Dedup.minhashLshPortable(
         t(s, dir, "documents").select(col("doc_id"), col("text")),
@@ -3796,10 +3724,9 @@ object SparkEntry {
     * doc with the shared model instead; training still happens
     * exactly once via [[q190CurWeights]], and the dup flags reuse
     * [[q218Pairs]]). */
-  private val q218FlagsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q218FlagsMemo = SessionMemo.checkpointed()
   private def q218Flags(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q218FlagsMemo, s, dir) {
+    q218FlagsMemo(s, dir) {
       decisionFlags(s, dir,
         t(s, dir, "documents").select(col("doc_id"), col("text")),
         pairs = Some(q218Pairs(s, dir)))
@@ -3851,12 +3778,12 @@ object SparkEntry {
     * persisted parquet so serving runs never re-tokenize the corpus.
     * Index-served scores are integer-identical to recomputed ones
     * (`Bm25Spec`), so the q191 hash gate is unchanged. */
-  private val q191IndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), operators.TextAnalysis.Bm25Index]
+  private val q191IndexMemo =
+    SessionMemo[operators.TextAnalysis.Bm25Index](ix =>
+      SessionMemo.unpersist(ix.postings, ix.termDf, ix.stats))
   private def q191Bm25Index(s: SparkSession, dir: String,
-      corpusDocs: DataFrame): operators.TextAnalysis.Bm25Index = {
-    q191IndexMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    q191IndexMemo.computeIfAbsent((s, dir), _ => {
+      corpusDocs: DataFrame): operators.TextAnalysis.Bm25Index =
+    q191IndexMemo(s, dir) {
       implicit val spark: SparkSession = s
       def built = operators.TextAnalysis.bm25Index(
         corpusDocs, "text", "doc_id")
@@ -3869,8 +3796,7 @@ object SparkEntry {
         ix.postings.localCheckpoint(true),
         ix.termDf.localCheckpoint(true),
         ix.stats.localCheckpoint(true))
-    })
-  }
+    }
 
   /** The q191 candidate-generation parts (query terms, corpus docs,
     * BM25 ranks, beam-ANN ranks), memoized per (session, dir) so the
@@ -3879,11 +3805,13 @@ object SparkEntry {
   private final case class HybridParts(
       queryTerms: DataFrame, corpusDocs: DataFrame,
       bmRanks: DataFrame, annRanks: DataFrame)
-  private val q191PartsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), HybridParts]
-  private def q191Parts(s: SparkSession, dir: String): HybridParts = {
-    q191PartsMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    q191PartsMemo.computeIfAbsent((s, dir), _ => {
+  // corpusDocs is a lazy plan over the base tables, and bmRanks reads
+  // the q191 index only through its own checkpoint: release frees the
+  // three checkpoints this build made, never another memo's blocks
+  private val q191PartsMemo = SessionMemo[HybridParts](p =>
+    SessionMemo.unpersist(p.queryTerms, p.bmRanks, p.annRanks))
+  private def q191Parts(s: SparkSession, dir: String): HybridParts =
+    q191PartsMemo(s, dir) {
       val p152 = SketchParams.q152
       val p = SketchParams.q157
       val pb = SketchParams.q183
@@ -3933,8 +3861,7 @@ object SparkEntry {
           col("neighbor_id").as("doc_id"), col("rank"), col("d"))
         .localCheckpoint(true)
       HybridParts(queryTerms, corpusDocs, bm25Ranks, annRanks)
-    })
-  }
+    }
 
   def q191HybridRetrieval(s: SparkSession, dir: String): DataFrame = {
     val ph = SketchParams.q191
@@ -4122,10 +4049,9 @@ object SparkEntry {
     * report), q209 (the PR curve over it) and q210 (its exact AUC),
     * so one perceptron training run feeds all three within a Verify
     * pass (the q145Ir/q195Seg convention). */
-  private val q190ScoredMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q190ScoredMemo = SessionMemo.checkpointed()
   private def q190Scored(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q190ScoredMemo, s, dir) {
+    q190ScoredMemo(s, dir) {
       val p = SketchParams.q190
       val real = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val junkText = array_join(transform(
@@ -4272,10 +4198,9 @@ object SparkEntry {
     * report (the q195Seg convention). The trained model rides the
     * SPARK_GRAFT_CENTROIDS_DIR artifact opt-in (the q92/q199
     * convention; (piece, c, q) round-trips bit-exactly). */
-  private val q217SegMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q217SegMemo = SessionMemo.checkpointed()
   private def q217Seg(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q217SegMemo, s, dir) {
+    q217SegMemo(s, dir) {
       val p = SketchParams.q217
       TextAnalysis.unigramLmSegment(t(s, dir, "documents"), "text",
         q217Model(s, dir), p.maxPiece, p.maxWord)
@@ -4285,10 +4210,9 @@ object SparkEntry {
     * the segmentation so q219's byte-fallback run over an EXTENDED
     * corpus re-uses the one EM training (r18: one training of q217
     * for all consumers — q217/q219/q220). */
-  private val q217ModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q217ModelMemo = SessionMemo.checkpointed()
   private def q217Model(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q217ModelMemo, s, dir) {
+    q217ModelMemo(s, dir) {
       val p = SketchParams.q217
       implicit val spark: SparkSession = s
       val docs = t(s, dir, "documents")
@@ -4437,10 +4361,9 @@ object SparkEntry {
   /** The q222 EXACTSUBSTR dedup result, memoized — shared by q222 and
     * q236's dedup-aware mixture plan (r19): the SA build runs once per
     * session per sf dir. */
-  private val q222DedupMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q222DedupMemo = SessionMemo.checkpointed()
   private def q222Dedup(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q222DedupMemo, s, dir) {
+    q222DedupMemo(s, dir) {
       val p = SketchParams.q222
       operators.SuffixArray.exactSubstrDedup(
         nearDupCorpus(s, dir), "text", "doc_id", p.minSpan, p.rounds,
@@ -4460,10 +4383,9 @@ object SparkEntry {
 
   /** The q223 lined corpus + per-doc repetition report, memoized —
     * shared by q223 and q228's per-source funnel (r18). */
-  private val q223ReportMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private val q223ReportMemo = SessionMemo.checkpointed()
   private def q223Report(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(q223ReportMemo, s, dir) {
+    q223ReportMemo(s, dir) {
       val p = SketchParams.q223
       val toks = split(trim(col("text")), "\\s+")
       val nLines = floor((size(toks) - 1).cast("double") / p.lineTokens)
@@ -4562,15 +4484,13 @@ object SparkEntry {
     val batch = docs.filter(col("doc_id") % p.probeMod === 0)
       .select((col("doc_id") + p.probeOffset).as("doc_id"),
         regexp_replace(col("text"), " [^ ]+$", "").as("text"))
-    val ix = memoSubstrIndex(q230IndexMemo, s, dir, "graft-q230") {
-      operators.SuffixArray.buildSubstrIndex(docs,
-        "text", "doc_id", p.minSpan, p.baseSpan)
+    val (ix, _) = q230IndexMemo(s, dir) {
+      savedSubstrIndex(s, "graft-q230")(operators.SuffixArray
+        .buildSubstrIndex(docs, "text", "doc_id", p.minSpan, p.baseSpan))
     }
     operators.SuffixArray.exactSubstrProbe(ix, batch, "text", "doc_id")
   }
-  private val q230IndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (operators.SuffixArray.SubstrIndex, java.nio.file.Path)]
+  private val q230IndexMemo = substrIndexMemo()
 
   /** NORMALIZED-text exact-substring decontamination
     * ([[graft.operators.SuffixArray.exactSubstrContaminationNormalized]])
@@ -4683,14 +4603,13 @@ object SparkEntry {
   private def nearDupIndex(s: SparkSession,
       dir: String): operators.SuffixArray.SubstrIndex = {
     val p = SketchParams.q234
-    memoSubstrIndex(nearDupIndexMemo, s, dir, "graft-neardup-ix") {
-      operators.SuffixArray.buildSubstrIndex(
-        nearDupCorpus(s, dir), "text", "doc_id", p.minSpan, p.baseSpan)
-    }
+    nearDupIndexMemo(s, dir) {
+      savedSubstrIndex(s, "graft-neardup-ix")(
+        operators.SuffixArray.buildSubstrIndex(
+          nearDupCorpus(s, dir), "text", "doc_id", p.minSpan, p.baseSpan))
+    }._1
   }
-  private val nearDupIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (operators.SuffixArray.SubstrIndex, java.nio.file.Path)]
+  private val nearDupIndexMemo = substrIndexMemo()
 
   /** DEDUP-AWARE temperature plan: the q221 mixture arithmetic run
     * over EFFECTIVE (post-EXACTSUBSTR) per-source token inventories
@@ -5131,10 +5050,9 @@ object SparkEntry {
     * and the build trains nlist coarse + m sub-quantizers (a multi-job
     * subplan), so it shares one eager checkpoint per (session, dir):
     * the q133/q148/q152 memo convention. */
-  private val ivfPqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val ivfPqMemo = SessionMemo.checkpointed()
   private def ivfPqResult(s: SparkSession, dir: String): DataFrame =
-    memoCheckpoint(ivfPqMemo, s, dir) {
+    ivfPqMemo(s, dir) {
       val p = SketchParams.q162
       val emb = t(s, dir, "embeddings")
       Ann.ivfPqTopK(emb, emb.filter(col("vec_id") < p.maxQueryId),

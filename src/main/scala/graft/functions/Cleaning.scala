@@ -110,19 +110,11 @@ object Cleaning {
     * with fuzzywuzzy's disjoint-token-set quirk rejected (see the WRatio
     * kernel scaladoc; bug-compatible WRatio would floor every
     * length-mismatched score at 85.5 and map junk onto a state).
-    * [[standardizeStateIndel]] keeps the earlier Indel fallback; the two
-    * agree on every alias key and near-exact typo (CleaningSpec), WRatio
-    * additionally accepts containment-style inputs ("NSW AUSTRALIA"). */
-  def standardizeState(state: Column): Column =
-    standardizeStateWith(state, exprs.wratio)
-
-  /** F12 with the Indel-ratio fallback (the pre-WRatio variant, kept for
-    * the recorded scorer-divergence comparison). */
-  def standardizeStateIndel(state: Column): Column =
-    standardizeStateWith(state, exprs.indel_ratio)
-
-  private def standardizeStateWith(
-      state: Column, scorer: (Column, Column) => Column): Column = {
+    * CleaningSpec records where it departs from the earlier Indel
+    * fallback: the two agree on every alias key and near-exact typo,
+    * WRatio additionally accepts containment-style inputs
+    * ("NSW AUSTRALIA"). */
+  def standardizeState(state: Column): Column = {
     val norm = cleanText(upper(regexp_replace(state, "\\.", " ")))
     val exact = StateMapping.foldLeft(lit(null).cast("string")) {
       case (acc, (k, v)) => when(norm === lit(k), lit(v)).otherwise(acc)
@@ -131,7 +123,7 @@ object Cleaning {
     // ties break to the lexicographically largest (score, std) struct,
     // deterministic — the reference's extractOne is scan-order-dependent
     val scored = StateMapping.keys.toSeq.sorted.map { k =>
-      struct(scorer(norm, lit(k)).as("score"),
+      struct(exprs.wratio(norm, lit(k)).as("score"),
         lit(StateMapping(k)).as("std"))
     }
     val best = array_max(array(scored: _*))

@@ -265,8 +265,8 @@ object Stats {
     * [[Packing.assignShards]] documents). The final argmax is one
     * `min_by` partial aggregate; the totals are the sums of the
     * driver-side subtotals, so the input is read once. Both inputs must
-    * be non-empty (an empty side has no ECDF); StatsSpec pins the row
-    * an empty side or an empty input returns.
+    * have a non-null value (an empty side has no ECDF): otherwise the
+    * call throws an IllegalArgumentException naming both totals.
     *
     * @return ONE row: (n_a, n_b, at_value, d_num, ks) */
   def ksStatistic(a: DataFrame, b: DataFrame, valueCol: String,
@@ -281,6 +281,8 @@ object Stats {
       .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
     val (cums, Seq(na, nb)) =
       Packing.prefixSumsWithTotals(m, "v", Seq("ca", "cb"), numParts)
+    require(na > 0 && nb > 0,
+      s"ksStatistic needs both sides non-empty: n_a = $na, n_b = $nb")
     cums.select(col("v"), abs((col("ca_offset") + col("ca")) * nb -
         (col("cb_offset") + col("cb")) * na).as("__d"))
       .agg(min_by(

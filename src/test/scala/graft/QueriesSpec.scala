@@ -3,7 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke: every SparkEntry query executes at sf0.001 and the contract
-  * invariants hold (oracle keys ⊆ query keys; flagship returns rows). */
+  * invariants hold (oracle keys ⊆ query keys; flagship returns rows).
+  * Each query runs into the noop sink, which computes every column, as
+  * the bench does; `count()` would let column pruning skip them. */
 class QueriesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
   private val dir = "/root/testdata/sf0.001"
@@ -19,8 +21,7 @@ class QueriesSpec extends AnyFunSuite {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executes at sf0.001") {
-      val n = fn(spark, dir).count()
-      assert(n >= 0)
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
     }
   }
 }

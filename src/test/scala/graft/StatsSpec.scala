@@ -223,18 +223,16 @@ class StatsSpec extends AnyFunSuite {
     }
   }
 
-  test("ksStatistic: an empty side fails on its zero total; an empty " +
-      "input yields one all-null row") {
+  test("ksStatistic: an empty side or input fails with a named error") {
     import spark.implicits._
     val a = Seq(3L, 1L, 1L).toDF("x")
     val none = Seq.empty[Long].toDF("x")
-    for ((x, y) <- Seq((a, none), (none, a))) {
-      val e = intercept[ArithmeticException](
-        Stats.ksStatistic(x, y, "x").collect())
-      assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
+    for ((x, y, na, nb) <- Seq((a, none, 3, 0), (none, a, 0, 3),
+        (none, none, 0, 0))) {
+      val e = intercept[IllegalArgumentException](
+        Stats.ksStatistic(x, y, "x"))
+      assert(e.getMessage.contains(s"n_a = $na, n_b = $nb"), e.getMessage)
     }
-    val rows = Stats.ksStatistic(none, none, "x").collect()
-    assert(rows.length == 1 && (0 until 5).forall(rows.head.isNullAt), rows)
   }
 
   test("ksStatistic: partition-count independent (the two-phase scan " +
